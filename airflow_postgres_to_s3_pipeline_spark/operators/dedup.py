@@ -143,54 +143,23 @@ def shingle(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
-def minhash_signatures(shingles: DataFrame, n_hashes: int = 32) -> DataFrame:
-    """MinHash signature per doc, row-local: sig_i = min over the shingle
-    array of xxhash64(shingle, seed_i).
-
-    ``array_min(transform(...))`` keeps all n_hashes slots inside the scan
-    stage — zero shuffles (the exploded groupBy-min formulation shuffles
-    the entire shingle table, which is corpus-sized).
-    """
-    sig_cols = [
-        F.array_min(
-            F.transform(F.col("shingles"), lambda s: F.xxhash64(s, F.lit(seed)))
-        ).alias(f"h{seed}")
-        for seed in range(n_hashes)
-    ]
-    return shingles.select("doc_id", *sig_cols)
-
-
-MERSENNE_P = 2147483647  # 2^31 - 1; the MinHash value space for the md5 tier
+MERSENNE_P = 2147483647  # 2^31 - 1; the MinHash value space
 
 
 def minhash_signatures_md5(shingles: DataFrame, n_hashes: int = 32) -> DataFrame:
-    """MinHash signatures derived from ONE md5 per shingle — the
-    DuckDB-oracle-checkable tier, served by the vectorized numpy kernel
-    (``_minhash_signatures_md5_np``; r13 optimization, guide §4.2).
+    """MinHash signatures derived from ONE md5 per shingle, as one
+    vectorized mapInPandas pass: per shingle, the (x1, x2)
+    Kirsch-Mitzenmacher pair of ``minhash_signatures_md5_expr`` (md5 hex
+    slices 1-15 / 16-30 -> int64 mod p / mod p-1 + 1), then all
+    ``n_hashes`` slot minima with segment-min (``np.minimum.reduceat``)
+    instead of 32 interpreted array transforms.
 
-    The expression formulation (``minhash_signatures_md5_expr``) is kept
-    as the SQL-mirror reference: every value it produces is pure integer
-    arithmetic over md5 hex slices, so the numpy tier reproduces it
-    BIT-identically (hashlib md5 == Spark md5 == DuckDB md5; int64
-    add/mul/mod have no rounding) — pinned by
+    Integer-exact (hashlib md5 == Spark md5 == DuckDB md5; int64
+    add/mul/mod have no rounding), so BIT-identical to the expression
+    reference and to the SQL oracles — pinned by
     tests/test_dedup.py::test_minhash_signatures_np_matches_expr.
     Measured at sf0.1: the signature pass over warm shingles dropped
-    ~1.0s -> ~0.2s (the 32 interpreted transform/array_min HOF passes
-    and the per-shingle conv(hex) pair were the cost — same class as the
-    hyperplane-LSH fold the GEMM tier replaced).
-    """
-    return _minhash_signatures_md5_np(shingles, n_hashes)
-
-
-def _minhash_signatures_md5_np(shingles: DataFrame,
-                               n_hashes: int = 32) -> DataFrame:
-    """Numpy kernel for the md5 MinHash tier: one mapInPandas pass that
-    computes, per shingle, the same (x1, x2) Kirsch-Mitzenmacher pair the
-    expression tier derives (md5 hex slices 1-15 / 16-30 -> int64 mod
-    p / mod p-1 + 1) and then all ``n_hashes`` slot minima with
-    vectorized segment-min (``np.minimum.reduceat``) instead of 32
-    interpreted array transforms.  Integer-exact, so bit-identical to
-    ``minhash_signatures_md5_expr`` and to the SQL oracles.
+    ~1.0s -> ~0.2s against the expression formulation.
 
     The per-slot candidate values are bounded by x1 + 31*x2 < 2^36, far
     inside int64 — no overflow; ``%`` on non-negative int64 matches
@@ -272,11 +241,10 @@ def minhash_signatures_md5_expr(shingles: DataFrame,
     [0, p) / [1, p-1] ranges.  Every step (md5, hex→bigint, modular
     arithmetic, array min) is bit-identical in any engine with md5 +
     64-bit integers, so the full signature→band→candidate→Jaccard chain
-    carries an exact SQL oracle — unlike the xxhash64 tier, whose hash
-    DuckDB cannot mirror.  Still entirely row-local (zero shuffles), one
-    md5 + two hex→bigint conversions per shingle (the per-slot work is
-    two adds and a mod over a 2-field struct array; the second conv
-    showed no whole-query regression at sf0.1 — minhash_lsh_dedup
+    carries an exact SQL oracle.  Still entirely row-local (zero
+    shuffles), one md5 + two hex→bigint conversions per shingle (the
+    per-slot work is two adds and a mod over a 2-field struct array; the
+    second conv showed no whole-query regression at sf0.1 — minhash_lsh_dedup
     1.97s->1.90s warm, dedup_components 2.86s->2.59s, see docs/SCALE.md).
     """
     p = F.lit(MERSENNE_P).cast("long")
@@ -320,39 +288,28 @@ def minhash_signatures_md5_expr(shingles: DataFrame,
 
 
 def banded_keys(signatures: DataFrame, n_hashes: int = 32,
-                bands: int = 8, checkable: bool = False) -> DataFrame:
+                bands: int = 8) -> DataFrame:
     """Explode a signature frame into (doc_id, band, band_hash) rows — the
     shared banding step of the self-join (``lsh_candidate_pairs``) and
-    cross-set (``dedup_incremental_minhash``) LSH paths."""
+    cross-set (``dedup_incremental_minhash``) LSH paths.  The band key is
+    the band's signature values joined by ``|``, which the SQL oracles
+    mirror exactly."""
     rows = n_hashes // bands
-    if checkable:
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"h{b * rows + r}").cast("string")
-                            for r in range(rows)
-                        ],
-                    ).alias("band_hash"),
-                )
-                for b in range(bands)
-            ]
-        )
-    else:
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.hash(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias(
-                        "band_hash"
-                    ),
-                )
-                for b in range(bands)
-            ]
-        )
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws(
+                    "|",
+                    *[
+                        F.col(f"h{b * rows + r}").cast("string")
+                        for r in range(rows)
+                    ],
+                ).alias("band_hash"),
+            )
+            for b in range(bands)
+        ]
+    )
     return signatures.select(
         "doc_id", F.explode(band_structs).alias("bh")
     ).select(
@@ -397,6 +354,23 @@ def _cap_buckets(banded: DataFrame, max_bucket: int,
     )
 
 
+def sorted_pairs(arr, make):
+    """The C(b,2) pair expansion of an array column, row-local in a HOF:
+    ``make(x, y)`` for every element x and every y after it, in order.
+    On a sorted array of distinct values this is exactly a self-join's
+    ``a < b`` pair set.  Only safe on a size-capped array — an uncapped
+    hub's C(b,2) results would materialize inside ONE row in one task."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + F.lit(2), F.size(arr)),
+                lambda y: make(x, y),
+            ),
+        )
+    )
+
+
 def _bucket_pair_expansion(banded: DataFrame, group_cols: tuple[str, ...],
                            max_bucket: int,
                            carry_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -416,15 +390,8 @@ def _bucket_pair_expansion(banded: DataFrame, group_cols: tuple[str, ...],
     buckets = banded.groupBy(*group_cols).agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    ids = F.col("ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+    pairs = sorted_pairs(
+        F.col("ids"), lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
     )
     return (
         buckets.filter(
@@ -441,7 +408,7 @@ def _bucket_pair_expansion(banded: DataFrame, group_cols: tuple[str, ...],
 
 
 def lsh_candidate_pairs(signatures: DataFrame, n_hashes: int = 32,
-                        bands: int = 8, checkable: bool = False,
+                        bands: int = 8,
                         max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """Band the signatures and pair docs sharing a (band, band_hash) bucket.
 
@@ -467,13 +434,8 @@ def lsh_candidate_pairs(signatures: DataFrame, n_hashes: int = 32,
     ONE row in one task — so ``max_bucket=0/None`` (the debug/eval
     convention) keeps the distributed reference self-join, exactly like
     ``graph._basket_pair_edges``.
-
-    ``checkable=True`` keys the bands by the concatenated signature values
-    (exactly mirrorable in SQL) instead of murmur3 — band equality is the
-    same either way; murmur3 just packs the key into 4 bytes for the
-    shuffle, which is the right trade at 100 TB but opaque to the oracle.
     """
-    banded = banded_keys(signatures, n_hashes, bands, checkable)
+    banded = banded_keys(signatures, n_hashes, bands)
     if not max_bucket:
         a = banded.alias("a")
         b = banded.alias("b")
@@ -532,13 +494,12 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n_hashes: int = 32,
                       bands: int = 8, k: int = 3,
                       threshold: float = 0.6,
-                      shards: int | None = None,
-                      checkable: bool = False) -> DataFrame:
+                      shards: int | None = None) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle -> sign -> band -> verify.
 
-    ``checkable=True`` swaps the xxhash64 signature/murmur3 band tier for
-    the md5 double-hashing tier (``minhash_signatures_md5``) whose every
-    step has an exact SQL mirror — same plan shape, same shuffle count.
+    Signatures come from the md5 double-hashing kernel
+    (``minhash_signatures_md5``), so every step has an exact SQL mirror
+    (``_minhash_lsh_oracle``).
 
     Only two shuffles end-to-end regardless of corpus size: the banded
     candidate self-join and the candidate->shingle lookup; everything else
@@ -565,14 +526,13 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # signatures are (doc_id, 32 longs) -> thin.  Both registered with the
     # cache tracker so the terminal consumer releases them (cache.py).
     sh = tracked_persist(shingle_arrays(df, text_col, id_col, k), corpus=True)
-    sign = minhash_signatures_md5 if checkable else minhash_signatures
-    sig = tracked_persist(sign(sh, n_hashes))
-    cand = lsh_candidate_pairs(sig, n_hashes, bands, checkable=checkable)
+    sig = tracked_persist(minhash_signatures_md5(sh, n_hashes))
+    cand = lsh_candidate_pairs(sig, n_hashes, bands)
     return verify_jaccard(cand, sh, threshold)
 
 
 def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs over documents, md5-checkable tier.
+    """MinHash-LSH near-dup pairs over documents.
 
     LSH is probabilistic only in *which hash family* you fix up front; for
     a FIXED family the signature→band→candidate→Jaccard chain is fully
@@ -582,13 +542,13 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     shards = spark.sparkContext.defaultParallelism
-    return minhash_lsh_pairs(d, shards=shards, checkable=True)
+    return minhash_lsh_pairs(d, shards=shards)
 
 
 def _lsh_chain_sql(n_hashes: int = 32, bands: int = 8,
                    source: str = "SELECT doc_id, text FROM documents") -> str:
-    """Shared CTE chain (``src`` .. ``cand``) mirroring the md5-checkable
-    LSH pipeline up to candidate generation: shingle_arrays (list_distinct
+    """Shared CTE chain (``src`` .. ``cand``) mirroring the md5 LSH
+    pipeline up to candidate generation: shingle_arrays (list_distinct
     word-3-grams), the md5 double-hash signatures (n_hashes MIN aggregates
     over the exploded shingles), the concat-keyed banding (UNION ALL of one
     SELECT per band), and the banded self-join.  Interpolated into both the
@@ -677,7 +637,7 @@ def _lsh_band_cand_sql(n_hashes: int = 32, bands: int = 8,
 def _minhash_lsh_oracle(n_hashes: int = 32, bands: int = 8,
                         threshold: float = 0.6,
                         source: str = "SELECT doc_id, text FROM documents") -> str:
-    """Generate the exact SQL mirror of ``minhash_lsh_pairs(checkable=True)``:
+    """Generate the exact SQL mirror of ``minhash_lsh_pairs``:
     the shared LSH candidate chain plus exact-Jaccard verification.
     ``source`` is any (doc_id, text) relation, so the same template oracles
     doc-level and chunk-level near-dedup.
@@ -837,7 +797,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str,
     # as the oracle's self-join chain — a hub bucket is a hub regardless
     # of which side its members arrive on.
     banded = tracked_persist(
-        _cap_buckets(banded_keys(sig, checkable=True), LSH_MAX_BUCKET)
+        _cap_buckets(banded_keys(sig), LSH_MAX_BUCKET)
     )
     ex = banded.filter(F.col("doc_id") < split)
     inc = banded.filter(F.col("doc_id") >= split)
@@ -1021,14 +981,14 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     The end-to-end LLM-dedup shape: candidate pairs (sub-quadratic LSH) ->
     transitive clusters -> keep min doc_id per cluster.  Returns non-trivial
     clusters (size > 1) with the kept doc and the duplicate count.  Built on
-    the md5-checkable pair tier, so the WHOLE chain — signatures, banding,
+    the md5 MinHash pair chain, so the WHOLE chain — signatures, banding,
     Jaccard verification, transitive closure — carries an exact DuckDB
     oracle (recursive-CTE reachability mirrors the label-propagation loop);
     union-find equivalence and determinism are additionally pinned in tests.
     """
     d = table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
-        d, shards=spark.sparkContext.defaultParallelism, checkable=True
+        d, shards=spark.sparkContext.defaultParallelism
     ).select("doc_a", "doc_b")
     # max_iterations=10 gives headroom over the default 6 (each iteration
     # past convergence is skipped via the changed==0 break, so the extra
@@ -1054,7 +1014,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_components_oracle() -> str:
-    """Exact SQL mirror of ``dedup_components``: the md5-checkable MinHash
+    """Exact SQL mirror of ``dedup_components``: the md5 MinHash
     pair oracle feeds a recursive-CTE transitive closure (the SQL dual of
     the min-label-propagation loop); each edge-connected node labels itself
     with the minimum doc_id it can reach.  Singleton docs never join a
@@ -1105,7 +1065,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
-        d, shards=spark.sparkContext.defaultParallelism, checkable=True
+        d, shards=spark.sparkContext.defaultParallelism
     ).select("doc_a", "doc_b")
     # edge-node labels only (see dedup_components): the size>1 filter
     # makes singleton clusters unreachable, so the quality join and both
@@ -1185,77 +1145,24 @@ _oracle("dedup_keep_best", _dedup_keep_best_oracle())
 # E25b: SimHash near-dedup
 # ---------------------------------------------------------------------------
 
-def simhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = 64) -> DataFrame:
-    """64-bit SimHash per document, fully row-local (zero shuffles).
-
-    Token hashes are computed once into an array; each bit's +1/-1 vote sum
-    is a higher-order fold over that array.  The whole signature stage runs
-    inside the scan's map phase — the exploded groupBy formulation would
-    shuffle every token in the corpus.
-    """
-    token_hashes = F.transform(
-        F.filter(F.split(text_col, " "), lambda t: F.length(t) > 0),
-        lambda t: F.xxhash64(t),
-    )
-    hashed = df.select(F.col(id_col).alias("doc_id"), token_hashes.alias("ths"))
-
-    # Two-select formulation: 64 independent vote columns, then pack.  One
-    # fused 64-term expression measured 2x slower (the giant tree falls out
-    # of whole-stage codegen); independent columns stay codegen-friendly —
-    # same lesson as the MinHash column-vs-array measurement.
-    def _bit_set(i: int):
-        # factory so the single-arg lambda closes over i (a default arg
-        # would make PySpark treat it as an (element, index) lambda)
-        return lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1
-
-    vote_cols = []
-    for i in range(bits):
-        # votes_i = (#tokens with bit i set) * 2 - n_tokens
-        set_count = F.size(F.filter(F.col("ths"), _bit_set(i)))
-        vote_cols.append((set_count * 2 - F.size("ths")).alias(f"_v{i}"))
-    voted = hashed.select("doc_id", *vote_cols)
-
-    # Assemble the signature with shifts + bitwise OR (no arithmetic on the
-    # sign bit at i=63, safe under ANSI overflow checking).
-    sig = None
-    for i in range(bits):
-        term = F.when(
-            F.col(f"_v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-        sig = term if sig is None else sig.bitwiseOR(term)
-    return voted.select("doc_id", sig.alias("simhash"))
-
-
-SIMHASH_MD5_BITS = 60  # bits of md5 prefix used by the checkable tier
+SIMHASH_MD5_BITS = 60  # bits of md5 prefix per token hash and signature
 
 
 def simhash_signatures_md5(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id",
                            bits: int = SIMHASH_MD5_BITS) -> DataFrame:
-    """SimHash from md5-derived token hashes — the DuckDB-oracle-checkable
-    tier, served by the vectorized numpy kernel (r13 optimization, guide
-    §4.2: the 60 per-bit HOF filter passes over every doc's token-hash
-    array were 2.4s of simhash_dedup's 2.9s at sf0.1; the kernel computes
-    the same votes with 60 ``np.add.reduceat`` segment sums at ~0.2s).
-    All integer arithmetic (md5 hex slice -> int64, counts, shifts), so
-    the signatures are BIT-identical to the expression tier
-    (``simhash_signatures_md5_expr``) and the SQL oracles — pinned by
+    """SimHash from md5-derived token hashes, as one vectorized
+    mapInPandas pass: tokenize exactly like
+    ``simhash_signatures_md5_expr`` (split on single spaces, empty tokens
+    dropped, zero-token docs omitted), hash each token to its 60-bit md5
+    prefix, and assemble the signature from per-bit vote sums
+    v_i = 2 * count(bit i set) - n_tokens, bit i = (v_i > 0), computed
+    with ``np.add.reduceat`` segment sums (measured at sf0.1: ~0.2s
+    against 2.4s for the 60 per-bit HOF filter passes of the expression
+    formulation).  All integer arithmetic, so BIT-identical to the
+    expression reference and the SQL oracles — pinned by
     tests/test_dedup.py::test_simhash_signatures_np_matches_expr.
     """
-    return _simhash_signatures_md5_np(df, text_col, id_col, bits)
-
-
-def _simhash_signatures_md5_np(df: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id",
-                               bits: int = SIMHASH_MD5_BITS) -> DataFrame:
-    """Numpy kernel for the md5 SimHash tier: one mapInPandas pass that
-    tokenizes exactly like the expression tier (split on single spaces,
-    empty tokens dropped, zero-token docs omitted), hashes each token to
-    its 60-bit md5 prefix, and assembles the signature from vectorized
-    per-bit vote sums: v_i = 2 * count(bit i set) - n_tokens, bit i of
-    the signature = (v_i > 0).  Integer-exact, hence bit-identical to
-    ``simhash_signatures_md5_expr`` and the QUALIFY-mirrored oracles."""
 
     def sign(batches):
         import hashlib
@@ -1312,8 +1219,7 @@ def simhash_signatures_md5_expr(df: DataFrame, text_col: str = "text",
     integers.  60 signature bits instead of 64 — four bits of resolution
     traded for an exact SQL mirror.  Row-local (zero shuffles); the 60
     per-bit HOF filters are the cost the numpy kernel removes.
-    Zero-token docs are dropped (they have no signature; the xxhash64
-    tier keeps them at sig=0, which the SQL mirror cannot express).
+    Zero-token docs are dropped (they have no signature).
     """
     token_hashes = F.transform(
         F.filter(F.split(text_col, " "), lambda t: F.length(t) > 0),
@@ -1345,12 +1251,12 @@ def simhash_signatures_md5_expr(df: DataFrame, text_col: str = "text",
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", max_hamming: int = 3,
-                       checkable: bool = False,
                        max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance, banded for scale.
 
-    Splits the signature into 4 chunks (16 bits each for the 64-bit
-    xxhash64 tier, 15 for the 60-bit md5 ``checkable`` tier); any pair
+    Signatures are the 60-bit md5 SimHash (``simhash_signatures_md5``),
+    so documents with no non-empty token have no signature and never
+    pair.  Splits the signature into 4 chunks of 15 bits; any pair
     within hamming distance 3 must agree on >= 1 chunk (pigeonhole), so
     candidate generation is ONE equi-join on (chunk_id, chunk value) over
     the exploded chunk rows instead of an all-pairs scan.
@@ -1371,12 +1277,8 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
     # capped path: the bucket-collapse expansion consumes the signatures
     # ONCE, so no persist barrier is needed (the r13 shape below); the
     # uncapped self-join fallback consumes them twice and persists.
-    if checkable:
-        sig = simhash_signatures_md5(df, text_col, id_col)
-        chunk_bits, n_chunks = 15, 4
-    else:
-        sig = simhash_signatures(df, text_col, id_col)
-        chunk_bits, n_chunks = 16, 4
+    sig = simhash_signatures_md5(df, text_col, id_col)
+    chunk_bits, n_chunks = 15, 4
     if not max_bucket:
         sig = tracked_persist(sig)
     mask = (1 << chunk_bits) - 1
@@ -1411,20 +1313,14 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
                 F.collect_list(F.struct("doc_id", "simhash"))
             ).alias("ms")
         )
-        ms = F.col("ms")
-        pair_structs = F.flatten(
-            F.transform(
-                ms,
-                lambda x, i: F.transform(
-                    F.slice(ms, i + F.lit(2), F.size(ms)),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"),
-                        x["simhash"].alias("sig_a"),
-                        y["simhash"].alias("sig_b"),
-                    ),
-                ),
-            )
+        pair_structs = sorted_pairs(
+            F.col("ms"),
+            lambda x, y: F.struct(
+                x["doc_id"].alias("doc_a"),
+                y["doc_id"].alias("doc_b"),
+                x["simhash"].alias("sig_a"),
+                y["simhash"].alias("sig_b"),
+            ),
         )
         cand = (
             buckets.filter(
@@ -1459,7 +1355,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
 
 
 def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs over documents, md5-checkable tier.
+    """SimHash near-dup pairs over documents.
 
     Like MinHash-LSH: for a FIXED hash family the vote→threshold→band→
     hamming chain is fully deterministic, so md5-derived token hashes give
@@ -1468,18 +1364,17 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    return simhash_near_pairs(d, checkable=True)
+    return simhash_near_pairs(d)
 
 
 def _simhash_oracle(bits: int = SIMHASH_MD5_BITS, chunk_bits: int = 15,
                     max_hamming: int = 3,
                     source: str = "SELECT doc_id, text FROM documents",
                     max_bucket: int = LSH_MAX_BUCKET) -> str:
-    """Exact SQL mirror of ``simhash_near_pairs(checkable=True)``: md5
-    token hashes, per-bit vote sums, sign-threshold signature assembly,
-    15-bit chunk banding (hub chunks over ``max_bucket`` dropped by the
-    identical QUALIFY windowed count, falsy = disabled), hamming
-    verification."""
+    """Exact SQL mirror of ``simhash_near_pairs``: md5 token hashes,
+    per-bit vote sums, sign-threshold signature assembly, 15-bit chunk
+    banding (hub chunks over ``max_bucket`` dropped by the identical
+    QUALIFY windowed count, falsy = disabled), hamming verification."""
     vote_exprs = ",\n               ".join(
         f"2 * SUM(CAST((x >> {i}) & 1 AS BIGINT)) - COUNT(*) AS v{i}"
         for i in range(bits)
@@ -1618,15 +1513,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("set_size"))
         )
-        ids = F.col("ids")
-        pair_structs = F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + F.lit(2), F.size(ids)),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
+        pair_structs = sorted_pairs(
+            F.col("ids"),
+            lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
         )
         inter = (
             buckets.filter(F.size("ids") >= 2)
@@ -1756,7 +1645,7 @@ _oracle("chunk_dedup", _chunk_dedup_oracle())
 
 
 def chunk_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate passages via the md5-checkable MinHash-LSH tier over
+    """Near-duplicate passages via the md5 MinHash-LSH pipeline over
     non-overlapping chunks — catches boilerplate that exact chunk hashing
     misses (a date or name swapped inside an otherwise-identical passage).
 
@@ -1776,7 +1665,7 @@ def chunk_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("chunk_text").alias("text"),
     )
     pairs = minhash_lsh_pairs(
-        chunks, shards=spark.sparkContext.defaultParallelism, checkable=True
+        chunks, shards=spark.sparkContext.defaultParallelism
     )
     return pairs.filter(
         F.expr(f"doc_a div {CHUNK_ID_BASE} != doc_b div {CHUNK_ID_BASE}")
@@ -1990,7 +1879,7 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str,
     ).repartition(spark.sparkContext.defaultParallelism)
     sh = tracked_persist(shingle_arrays(d, "text", "doc_id", 3), corpus=True)
     sig = tracked_persist(minhash_signatures_md5(sh, n_hashes))
-    cand = lsh_candidate_pairs(sig, n_hashes, bands, checkable=True)
+    cand = lsh_candidate_pairs(sig, n_hashes, bands)
     truth = _exact_jaccard_pairs(sh, threshold)
 
     # Tag-union + per-pair max, then one global aggregate: a single pair-key
@@ -2122,7 +2011,7 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str,
     # run); the unchanged oracle pins the equivalence.
     banded_all = None
     for b in band_grid:
-        bk = banded_keys(sig, n_hashes, b, checkable=True).select(
+        bk = banded_keys(sig, n_hashes, b).select(
             F.lit(b).alias("bands"), "band", "band_hash", "doc_id"
         )
         banded_all = bk if banded_all is None else banded_all.unionByName(bk)
@@ -2245,7 +2134,7 @@ def corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Membership is corpus-global attributed to the doc's own source (a doc
     duplicating across sources counts for its source), exact = its md5
     appears more than once, near = it appears on either side of a
-    verified MinHash-LSH pair (md5-checkable tier, so the whole report
+    verified MinHash-LSH pair (md5 hashes throughout, so the whole report
     carries an exact SQL oracle; exact dups are also near-dups at
     Jaccard 1.0 — ``n_dup_docs`` is the DISTINCT union, not the sum).
 
@@ -2274,7 +2163,7 @@ def corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "is_exact")
     )
     pairs = minhash_lsh_pairs(
-        d, shards=spark.sparkContext.defaultParallelism, checkable=True
+        d, shards=spark.sparkContext.defaultParallelism
     ).select("doc_a", "doc_b")
     near_member = (
         pairs.select(F.col("doc_a").alias("doc_id"))

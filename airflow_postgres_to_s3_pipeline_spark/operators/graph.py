@@ -30,7 +30,10 @@ from pyspark.sql import functions as F
 
 from airflow_postgres_to_s3_pipeline_spark.cache import tracked_persist
 from airflow_postgres_to_s3_pipeline_spark.catalog import table
-from airflow_postgres_to_s3_pipeline_spark.operators.dedup import _cap_buckets
+from airflow_postgres_to_s3_pipeline_spark.operators.dedup import (
+    _cap_buckets,
+    sorted_pairs,
+)
 
 ORACLES: dict[str, str] = {}
 
@@ -168,18 +171,20 @@ def _pairs_from_sets(baskets: DataFrame) -> DataFrame:
     """Expand each sorted part set to its C(b,2) ordered pairs inside a
     higher-order function — one (pa, pb) row per (order, pair), pa < pb:
     the exact multiset the basket self-join emits (pinned by test)."""
-    parts = F.col("parts")
-    pairs = F.flatten(
-        F.transform(
-            parts,
-            lambda x, i: F.transform(
-                F.slice(parts, i + F.lit(2), F.size(parts)),
-                lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-            ),
-        )
+    pairs = sorted_pairs(
+        F.col("parts"), lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
     )
     return baskets.select(F.explode(pairs).alias("e")).select(
         F.col("e.pa").alias("pa"), F.col("e.pb").alias("pb")
+    )
+
+
+def _both_orientations(x, y):
+    """``sorted_pairs`` make for the symmetric edge feed: (x, y) and
+    (y, x) as one two-struct array, flattened once more by the caller."""
+    return F.array(
+        F.struct(x.alias("pa"), y.alias("pb")),
+        F.struct(y.alias("pa"), x.alias("pb")),
     )
 
 
@@ -201,21 +206,7 @@ def _basket_pair_edges_sym(spark: SparkSession, sf_dir: str,
         return half.unionAll(
             half.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
         )
-    parts = F.col("parts")
-    sym = F.flatten(
-        F.transform(
-            parts,
-            lambda x, i: F.flatten(
-                F.transform(
-                    F.slice(parts, i + F.lit(2), F.size(parts)),
-                    lambda y: F.array(
-                        F.struct(x.alias("pa"), y.alias("pb")),
-                        F.struct(y.alias("pa"), x.alias("pb")),
-                    ),
-                )
-            ),
-        )
-    )
+    sym = F.flatten(sorted_pairs(F.col("parts"), _both_orientations))
     return (
         _basket_sets(spark, sf_dir, max_basket)
         .select(F.explode(sym).alias("e"))

@@ -1242,6 +1242,9 @@ def winnowing_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole chain DuckDB-mirrorable.
     """
     from airflow_postgres_to_s3_pipeline_spark.cache import tracked_persist
+    from airflow_postgres_to_s3_pipeline_spark.operators.dedup import (
+        sorted_pairs,
+    )
 
     d = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
@@ -1268,15 +1271,8 @@ def winnowing_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = post.groupBy("fp").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    ids = F.col("ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pairs = sorted_pairs(
+        F.col("ids"), lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
     )
     return (
         buckets.filter(

@@ -79,12 +79,15 @@ def read_snapshots(
     ``mode='FAILFAST'`` reproduces the reference's hard-error behavior
     (Postgres COPY rejecting bad numerics, README.md:148-151);
     ``mode='PERMISSIVE'`` is the lenient upgrade.  The ``\\N`` sentinel and
-    empty strings both read back as null.
+    empty strings both read back as null.  Quoting is RFC 4180: a quote
+    inside a quoted field is doubled (``escape='"'``), as the snapshot
+    files write it.
     """
     return (
         spark.read.schema(schema)
         .option("header", True)
         .option("nullValue", "\\N")
+        .option("escape", '"')
         .option("mode", mode)
         .csv(paths)
     )
@@ -146,11 +149,17 @@ def export_to_storage(
     fetchall-into-StringIO single PUT (postgres_to_s3_operator.py:43-63) is
     O(result) driver memory and is not reproduced.  ``single_file=True``
     (coalesce(1)) exists only for small-export parity with the reference's
-    one-object layout; never use it at scale.
+    one-object layout; never use it at scale.  CSV quoting is RFC 4180
+    (embedded quotes doubled), the same dialect ``read_snapshots`` reads.
     """
     writer = (df.coalesce(1) if single_file else df).write.mode("overwrite")
     if fmt == "csv":
-        writer.option("header", True).option("nullValue", "\\N").csv(out_path)
+        (
+            writer.option("header", True)
+            .option("nullValue", "\\N")
+            .option("escape", '"')
+            .csv(out_path)
+        )
     elif fmt == "parquet":
         writer.parquet(out_path)
     elif fmt == "json":

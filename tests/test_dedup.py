@@ -3,6 +3,7 @@ near-dups, but planting makes recall assertions deterministic)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from airflow_postgres_to_s3_pipeline_spark.operators import dedup
@@ -28,6 +29,8 @@ def _docs(spark):
 
 
 def test_minhash_lsh_finds_planted_pairs(spark):
+    # the md5 double-hash signatures and concat-keyed bands catch both
+    # the identical and the near doc; verification is exact Jaccard
     pairs = dedup.minhash_lsh_pairs(_docs(spark), threshold=0.5)
     got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
     assert (1, 2) in got  # exact dup: jaccard 1.0, must always collide
@@ -42,14 +45,22 @@ def test_minhash_exact_dup_jaccard_is_one(spark):
 
 
 def test_minhash_md5_tier_matches_planted_pairs(spark):
-    # the checkable (md5 double-hash) tier must find the same verified
-    # pairs as the xxhash tier on planted dups: verification is exact
-    # Jaccard either way, and both band schemes catch identical/near docs
-    pairs = dedup.minhash_lsh_pairs(_docs(spark), threshold=0.5, checkable=True)
+    # the md5 double-hash tier is the only MinHash tier: its verified
+    # pairs carry the exact shingle-set Jaccard, checked here against an
+    # independent Python computation for the near pair
+    pairs = dedup.minhash_lsh_pairs(_docs(spark), threshold=0.5)
     got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs.collect()}
     assert got[(1, 2)] == 1.0
-    assert any(a != b and (a, b) != (1, 2) for (a, b) in got)
     assert all(4 not in p for p in got)
+
+    def shingles(text):
+        w = text.split(" ")
+        return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+
+    a, b = shingles(BASE), shingles(NEAR)
+    want = len(a & b) / len(a | b)
+    near = [j for (x, y), j in got.items() if 3 in (x, y)]
+    assert near and all(abs(j - want) < 1e-9 for j in near)
 
 
 def test_minhash_md5_signature_bit_determinism(spark):
@@ -284,15 +295,11 @@ def test_lsh_bucket_cap_drops_hub_keeps_true_pairs(spark):
     sig = dedup.minhash_signatures_md5(dedup.shingle_arrays(df))
     unc = {
         (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(
-            sig, checkable=True, max_bucket=0
-        ).collect()
+        for r in dedup.lsh_candidate_pairs(sig, max_bucket=0).collect()
     }
     cap = {
         (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(
-            sig, checkable=True, max_bucket=10
-        ).collect()
+        for r in dedup.lsh_candidate_pairs(sig, max_bucket=10).collect()
     }
     hub_pairs = {p for p in unc if p[0] < 30 and p[1] < 30}
     assert len(hub_pairs) == 435
@@ -371,13 +378,13 @@ def test_simhash_chunk_cap_drops_hub_keeps_true_pairs(spark):
     unc = {
         (r.doc_a, r.doc_b)
         for r in dedup.simhash_near_pairs(
-            df, max_hamming=10, checkable=True, max_bucket=0
+            df, max_hamming=10, max_bucket=0
         ).collect()
     }
     cap = {
         (r.doc_a, r.doc_b)
         for r in dedup.simhash_near_pairs(
-            df, max_hamming=10, checkable=True, max_bucket=10
+            df, max_hamming=10, max_bucket=10
         ).collect()
     }
     hub_pairs = {p for p in unc if p[0] < 30 and p[1] < 30}
@@ -407,7 +414,7 @@ def test_simhash_binding_cap_matches_oracle(spark, tmp_path):
     got = sorted(
         (r.doc_a, r.doc_b, r.hamming)
         for r in dedup.simhash_near_pairs(
-            df, max_hamming=10, checkable=True, max_bucket=10
+            df, max_hamming=10, max_bucket=10
         ).collect()
     )
     con = duckdb.connect()
@@ -600,13 +607,11 @@ def test_lsh_candidate_pairs_grouped_matches_selfjoin(spark, sf_dir):
     sig = dedup.minhash_signatures_md5(dedup.shingle_arrays(d))
     grouped = {
         (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(sig, checkable=True).collect()
+        for r in dedup.lsh_candidate_pairs(sig).collect()
     }
     selfjoin = {
         (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(
-            sig, checkable=True, max_bucket=0
-        ).collect()
+        for r in dedup.lsh_candidate_pairs(sig, max_bucket=0).collect()
     }
     assert grouped == selfjoin
     assert grouped  # non-vacuous: the corpus plants near-dups
@@ -622,7 +627,7 @@ def test_minhash_signatures_np_matches_expr(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     sh = dedup.shingle_arrays(d).persist()
     got = {r["doc_id"]: tuple(r)[1:] for r in
-           dedup._minhash_signatures_md5_np(sh, 8).collect()}
+           dedup.minhash_signatures_md5(sh, 8).collect()}
     want = {r["doc_id"]: tuple(r)[1:] for r in
             dedup.minhash_signatures_md5_expr(sh, 8).collect()}
     sh.unpersist()
@@ -641,7 +646,7 @@ def test_minhash_signatures_np_rejects_empty_arrays(spark):
         "doc_id long, shingles array<string>",
     )
     with pytest.raises(Exception, match="empty shingle array"):
-        dedup._minhash_signatures_md5_np(df, 4).collect()
+        dedup.minhash_signatures_md5(df, 4).collect()
 
 
 def test_simhash_signatures_np_matches_expr(spark, sf_dir):
@@ -652,7 +657,7 @@ def test_simhash_signatures_np_matches_expr(spark, sf_dir):
 
     d = table(spark, sf_dir, "documents")
     got = {r["doc_id"]: r["simhash"]
-           for r in dedup._simhash_signatures_md5_np(d).collect()}
+           for r in dedup.simhash_signatures_md5(d).collect()}
     want = {r["doc_id"]: r["simhash"]
             for r in dedup.simhash_signatures_md5_expr(d).collect()}
     assert got == want
@@ -664,7 +669,7 @@ def test_simhash_signatures_np_drops_zero_token_docs(spark):
         [(1, "alpha beta"), (2, ""), (3, "   "), (4, None)],
         "doc_id long, text string",
     )
-    got = {r["doc_id"] for r in dedup._simhash_signatures_md5_np(df).collect()}
+    got = {r["doc_id"] for r in dedup.simhash_signatures_md5(df).collect()}
     want = {r["doc_id"] for r in dedup.simhash_signatures_md5_expr(df).collect()}
     assert got == want == {1}
 
@@ -678,15 +683,38 @@ def test_simhash_grouped_cand_matches_selfjoin(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     grouped = {
         tuple(r)
-        for r in dedup.simhash_near_pairs(
-            d, checkable=True, max_hamming=10
-        ).collect()
+        for r in dedup.simhash_near_pairs(d, max_hamming=10).collect()
     }
     selfjoin = {
         tuple(r)
         for r in dedup.simhash_near_pairs(
-            d, checkable=True, max_hamming=10, max_bucket=0
+            d, max_hamming=10, max_bucket=0
         ).collect()
     }
     assert grouped == selfjoin
     assert grouped
+
+
+_DEGENERATE_FRAMES = {
+    "empty": [],
+    "one_row": [(1, BASE)],
+    "degenerate_texts": [
+        (1, None), (2, ""), (3, "   "), (4, "alpha"), (5, "alpha beta"),
+    ],
+}
+
+
+@pytest.mark.parametrize("frame", sorted(_DEGENERATE_FRAMES))
+@pytest.mark.parametrize(
+    "near_pairs", [dedup.minhash_lsh_pairs, dedup.simhash_near_pairs],
+    ids=["minhash", "simhash"],
+)
+def test_near_pairs_degenerate_inputs_yield_no_pairs(spark, frame, near_pairs):
+    """Empty and one-row corpora, and NULL / empty / whitespace-only /
+    one- and two-word texts (too short to shingle, or with no token to
+    sign), run both md5 near-dup chains to zero pairs without a
+    Python-worker error."""
+    df = spark.createDataFrame(
+        _DEGENERATE_FRAMES[frame], "doc_id long, text string"
+    )
+    assert near_pairs(df).collect() == []

@@ -128,3 +128,29 @@ def test_arbitrary_sql_export(spark, tmp_path):
     )
     got = {r["room_type"]: r["n"] for r in out.collect()}
     assert got == {"Entire home/apt": 1, "Private room": 1}
+
+
+def test_rfc4180_quoted_name_round_trips(spark, tmp_path):
+    """A ``name`` holding a comma and doubled quotes (RFC 4180) must load
+    as one field and come back out of the CSV export unchanged, as any
+    RFC 4180 reader (Python's csv module) sees it."""
+    import csv
+
+    name = 'Cozy "Loft" downtown, big'
+    row = (
+        '3,"Cozy ""Loft"" downtown, big",12,Cat,Downtown,Center,'
+        "42.6500000,-73.7500000,Entire home/apt,99.00,2,2024-01-15,1.25,"
+        "34,1,200,12,LIC3"
+    )
+    src = _write_snapshot(tmp_path, "s1.csv", [row])
+    wh = os.path.join(str(tmp_path), "warehouse")
+    ex = os.path.join(str(tmp_path), "export")
+    loaded = pipeline.run_pipeline(spark, [src], wh, ex, ds="2024-03-09")
+    got = loaded.collect()
+    assert [(r["name"], r["host_id"]) for r in got] == [(name, 12)]
+
+    exported = []
+    for part in sorted(glob.glob(os.path.join(ex, "part-*.csv"))):
+        with open(part, newline="", encoding="utf-8") as fh:
+            exported.extend(csv.DictReader(fh))
+    assert [(r["name"], r["host_id"]) for r in exported] == [(name, "12")]

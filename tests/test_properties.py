@@ -339,9 +339,7 @@ def test_lsh_band_refinement_subset_property(spark, docs):
         for bands in (2, 4, 8, 16):
             pair_sets[bands] = {
                 (r.doc_a, r.doc_b)
-                for r in lsh_candidate_pairs(
-                    sig, 32, bands, checkable=True
-                ).collect()
+                for r in lsh_candidate_pairs(sig, 32, bands).collect()
             }
         assert pair_sets[2] <= pair_sets[4] <= pair_sets[8] <= pair_sets[16]
     finally:
@@ -381,7 +379,7 @@ def test_lsh_bucket_cap_subset_laws(spark, seeds, n_clones, cap):
         return {
             (r.doc_a, r.doc_b)
             for r in dedup.lsh_candidate_pairs(
-                sig, checkable=True, max_bucket=max_bucket
+                sig, max_bucket=max_bucket
             ).collect()
         }
 
@@ -393,15 +391,62 @@ def test_lsh_bucket_cap_subset_laws(spark, seeds, n_clones, cap):
     ver_unc = {
         (r.doc_a, r.doc_b)
         for r in dedup.verify_jaccard(
-            dedup.lsh_candidate_pairs(sig, checkable=True, max_bucket=0),
+            dedup.lsh_candidate_pairs(sig, max_bucket=0),
             sh, 0.6,
         ).collect()
     }
     ver_cap = {
         (r.doc_a, r.doc_b)
         for r in dedup.verify_jaccard(
-            dedup.lsh_candidate_pairs(sig, checkable=True, max_bucket=cap),
+            dedup.lsh_candidate_pairs(sig, max_bucket=cap),
             sh, 0.6,
         ).collect()
     }
     assert ver_cap <= ver_unc
+
+
+@given(
+    arrays=st.lists(
+        st.lists(st.integers(-50, 50), max_size=8, unique=True).map(sorted),
+        min_size=1,
+        max_size=6,
+    )
+)
+@settings(**_SETTINGS)
+def test_sorted_pairs_is_combinations(spark, arrays):
+    """``sorted_pairs`` on a sorted distinct array is exactly
+    ``itertools.combinations(arr, 2)`` in order; the symmetric edge
+    make of ``graph._basket_pair_edges_sym`` yields (a, b) then (b, a)
+    for every such pair; arrays of size 0 and 1 yield no pairs."""
+    from itertools import combinations
+
+    from airflow_postgres_to_s3_pipeline_spark.operators.dedup import (
+        sorted_pairs,
+    )
+    from airflow_postgres_to_s3_pipeline_spark.operators.graph import (
+        _both_orientations,
+    )
+
+    arrays = arrays + [[], [7]]
+    df = spark.createDataFrame(
+        list(enumerate(arrays)), "row long, parts array<long>"
+    )
+    arr = F.col("parts")
+    got = {
+        r.row: r
+        for r in df.select(
+            "row",
+            sorted_pairs(
+                arr, lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
+            ).alias("pairs"),
+            F.flatten(sorted_pairs(arr, _both_orientations)).alias("sym"),
+        ).collect()
+    }
+    for i, a in enumerate(arrays):
+        want = list(combinations(a, 2))
+        assert [tuple(p) for p in got[i].pairs] == want
+        assert [tuple(p) for p in got[i].sym] == [
+            e for x, y in want for e in ((x, y), (y, x))
+        ]
+        if len(a) < 2:
+            assert got[i].pairs == [] and got[i].sym == []

@@ -37,7 +37,7 @@ def main() -> int:
     shards = spark.sparkContext.defaultParallelism
 
     def pairs_df():
-        return dedup.minhash_lsh_pairs(d, shards=shards, checkable=True).select(
+        return dedup.minhash_lsh_pairs(d, shards=shards).select(
             "doc_a", "doc_b"
         )
 
